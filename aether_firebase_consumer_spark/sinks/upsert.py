@@ -91,22 +91,42 @@ def hive_partition_value(v) -> str:
     return str(v)
 
 
-def _anti_by_keys(left: DataFrame, keys_df: DataFrame,
-                  key_cols: list[str]) -> DataFrame:
-    """NULL-SAFE ``left ANTI JOIN keys_df ON key_cols``: the
-    name-list join form uses null-unsafe equality, under which a
-    null-keyed row in ``left`` never matches a null key in the batch
-    — a MERGE would then keep the old row alongside the new one
-    (silent duplicate) and a DELETE would never delete it. Null keys
-    are pathological for a document table but perfectly legal for a
-    GROUP BY view maintained through this table (SQL groups nulls),
-    so key matching is ``<=>`` throughout."""
-    l, r = left.alias("l"), keys_df.select(*key_cols).alias("r")
-    cond = None
-    for k in key_cols:
-        e = F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-        cond = e if cond is None else cond & e
-    return l.join(r, cond, "left_anti")
+def _keys_match(l: str, r: str, key_cols: list[str]) -> Column:
+    """``l.k <=> r.k`` for every key column, AND-ed."""
+    return functools.reduce(lambda a, b: a & b, [
+        F.col(f"{l}.{k}").eqNullSafe(F.col(f"{r}.{k}")) for k in key_cols])
+
+
+def _filter_by_keys(left: DataFrame, keys_df: DataFrame,
+                    key_cols: list[str], how: str) -> DataFrame:
+    """NULL-SAFE ``left ANTI|SEMI JOIN keys_df ON key_cols`` (``how``
+    is ``left_anti`` or ``left_semi``): the name-list join form uses
+    null-unsafe equality, under which a null-keyed row in ``left``
+    never matches a null key in the batch — a MERGE would then keep
+    the old row alongside the new one (silent duplicate) and a DELETE
+    would never delete it. Null keys are pathological for a document
+    table but perfectly legal for a GROUP BY view maintained through
+    this table (SQL groups nulls), so key matching is ``<=>``
+    throughout."""
+    l, r = left.alias("_kl"), keys_df.select(*key_cols).alias("_kr")
+    return l.join(r, _keys_match("_kl", "_kr", key_cols), how)
+
+
+def _join_by_keys(left: DataFrame, right: DataFrame, key_cols: list[str],
+                  how: str) -> DataFrame:
+    """NULL-SAFE counterpart of ``left.join(right, key_cols, how)``:
+    the same output shape (one column per key, then ``left``'s and
+    ``right``'s other columns), with keys matched by ``<=>``."""
+    l, r = left.alias("_kl"), right.alias("_kr")
+    keys = [F.coalesce(F.col(f"_kl.{k}"), F.col(f"_kr.{k}")).alias(k)
+            if how == "full_outer" else F.col(f"_kl.{k}")
+            for k in key_cols]
+    return (l.join(r, _keys_match("_kl", "_kr", key_cols), how)
+            .select(*keys,
+                    *[F.col(f"_kl.{c}") for c in left.columns
+                      if c not in key_cols],
+                    *[F.col(f"_kr.{c}") for c in right.columns
+                      if c not in key_cols]))
 
 
 def _touched_filter(pc: str, touched: list) -> Column:
@@ -448,12 +468,15 @@ class ParquetUpsertTable:
     # pattern), invisible to data readers (underscore prefix), GC'd
     # with its version. changes(v) reads the recording when present and
     # falls back to the diff for versions without one (pre-r11 history,
-    # import_snapshot). Determinism: recordings are derived by reading
-    # BACK the staged files (never by re-evaluating the caller's batch
-    # plan, which may be non-deterministic between the data write and a
-    # second evaluation), diffed against the parent's touched
-    # partitions only — hardlink-carried partitions are inode-identical
-    # and provably contribute no changes.
+    # import_snapshot). Determinism: a merge records from the SAME
+    # materialization of its batch that it wrote (never a second
+    # evaluation of the caller's plan, which may be non-deterministic),
+    # diffed against the parent rows holding the batch's keys — a merge
+    # can change no other row, so the recording costs ∝ batch, not
+    # table. replace / delete_keys read BACK the staged files and diff
+    # them against the parent's rewritten scope only — hardlink-carried
+    # partitions are inode-identical and provably contribute no
+    # changes.
     _CHANGES_DIR = "_changes"
 
     @staticmethod
@@ -522,11 +545,13 @@ class ParquetUpsertTable:
                      new: DataFrame) -> DataFrame:
         """Key-level diff of two row sets as (key_cols...,
         change_type ∈ insert/update/delete): full-outer join on the
-        keys with a canonical row-hash comparison over the columns
-        both sides share — schema evolution (O14) compares only
-        common columns. Shared by the commit-time recorders and the
-        legacy-version fallback in :meth:`changes`, so recorded and
-        recomputed feeds agree by construction."""
+        keys (null-safe, like every key match here: an untouched
+        null-keyed row is no change) with a canonical row-hash
+        comparison over the columns both sides share — schema
+        evolution (O14) compares only common columns. Shared by the
+        commit-time recorders and the legacy-version fallback in
+        :meth:`changes`, so recorded and recomputed feeds agree by
+        construction."""
         if old is None:
             return new.select(*self.key_cols).withColumn(
                 "change_type", F.lit("insert"))
@@ -538,8 +563,8 @@ class ParquetUpsertTable:
                 *[F.col(c) for c in sorted(common)])))
             return df.select(*self.key_cols, h.alias(f"_h_{tag}"))
 
-        joined = rhash(old, "old").join(rhash(new, "new"),
-                                        self.key_cols, "full_outer")
+        joined = _join_by_keys(rhash(old, "old"), rhash(new, "new"),
+                               self.key_cols, "full_outer")
         return (joined.withColumn(
             "change_type",
             F.when(F.col("_h_old").isNull(), F.lit("insert"))
@@ -561,10 +586,12 @@ class ParquetUpsertTable:
         """Record the staged write's delta vs ``old`` (the parent rows
         of the REWRITTEN scope only — for a partition-pruned write,
         the touched partitions; carried hardlinks are unchanged by
-        construction). Reads the staged files back, so the recording
-        reflects exactly what was written. A rewrite that emptied its
-        whole scope leaves no staged files yet (hardlinks land after
-        recording) — the new side is then empty by definition.
+        construction) — the recorder of :meth:`replace` and
+        :meth:`delete_keys`. Reads the staged files back, so the
+        recording reflects exactly what was written. A rewrite that
+        emptied its whole scope leaves no staged files yet (hardlinks
+        land after recording) — the new side is then empty by
+        definition.
         ``batch`` (the caller's input frame) supplies authoritative
         column types for the VOID repair (see :meth:`_repair_void`)
         — the staged read-back loses the partition column's type when
@@ -582,14 +609,36 @@ class ParquetUpsertTable:
         self._write_changes(staged, diff,
                             hints=self._type_hints(batch, old))
 
+    def _record_merge(self, staged: str, scope: DataFrame | None,
+                      batch1: DataFrame, new: DataFrame) -> None:
+        """Record a merge's delta from its batch alone: a merge can
+        change only the batch's keys, so the diff runs between the
+        ``scope`` rows (the parent rows the merge rewrote — all of
+        them for a flat table, the touched partitions for a
+        partitioned one; None on table creation) that hold a batch key
+        and ``new``, the batch rows as written. Cost ∝ batch, not
+        table. ``batch1`` is the merge's one materialization of its
+        batch, so the recording cannot diverge from the written
+        rows."""
+        old = None if scope is None else _filter_by_keys(
+            scope, batch1, self.key_cols, "left_semi")
+        diff = self._diff_frames(old, new)
+        if self.record_change_values:
+            diff = self._attach_values(diff, new)
+        if self.record_change_preimages:
+            diff = self._attach_preimages(diff, old)
+        self._write_changes(staged, diff,
+                            hints=self._type_hints(batch1, old))
+
     def _attach_values(self, diff: DataFrame,
                        new: DataFrame) -> DataFrame:
         """Join the POST-IMAGE row onto each insert/update change row
         (``new`` has exactly one row per key, so the join is 1:1);
         delete rows carry nulls for the value columns — their message
         is the key's absence."""
-        ins_upd = (diff.filter(F.col("change_type") != "delete")
-                   .join(new, self.key_cols, "left"))
+        ins_upd = _join_by_keys(
+            diff.filter(F.col("change_type") != "delete"), new,
+            self.key_cols, "left")
         dels = diff.filter(F.col("change_type") == "delete")
         return ins_upd.unionByName(dels, allowMissingColumns=True)
 
@@ -607,8 +656,9 @@ class ParquetUpsertTable:
             *self.key_cols,
             *[F.col(c).alias(f"_pre_{c}") for c in old.columns
               if c not in self.key_cols])
-        upd_del = (diff.filter(F.col("change_type") != "insert")
-                   .join(pre, self.key_cols, "left"))
+        upd_del = _join_by_keys(
+            diff.filter(F.col("change_type") != "insert"), pre,
+            self.key_cols, "left")
         ins = diff.filter(F.col("change_type") == "insert")
         return upd_del.unionByName(ins, allowMissingColumns=True)
 
@@ -669,9 +719,11 @@ class ParquetUpsertTable:
     # -- merge ----------------------------------------------------------
     @_retrying
     def merge(self, batch: DataFrame,
-              commit_meta: "dict | Callable | None" = None) -> None:
+              commit_meta: "dict | Callable | None" = None) -> int:
         """Upsert ``batch`` by key: one row per key (dropDuplicates on
-        keys), replacing any existing rows with the same key.
+        keys), replacing any existing rows with the same key. Returns
+        the version that holds the batch (the parent version when the
+        batch is empty and nothing is committed).
 
         With ``partition_col`` set, the merge is PARTITION-PRUNED: only
         partitions containing batch keys are re-merged and rewritten;
@@ -680,12 +732,21 @@ class ParquetUpsertTable:
         partition list is driver-side but bounded by partitions-per-
         batch (the same metadata Delta/Iceberg keep in the commit log).
 
-        ``commit_meta`` (a small JSON-able dict) is written INTO the
-        new version directory before the pointer swap, so it becomes
+        The batch is materialized ONCE (an eager ``localCheckpoint``;
+        it is batch-sized): the emptiness check, the data write and
+        the commit-time change recording all read that materialization.
+        The recording is the batch against the parent rows holding its
+        keys (:meth:`_record_merge`), so its cost follows the batch,
+        not the table, for flat and partitioned tables alike.
+
+        ``commit_meta`` (a small JSON-able dict, or a callable
+        returning one — see :meth:`_publish`) is written INTO the new
+        version directory before the pointer swap, so it becomes
         visible atomically with the data — the Delta-style commit tag
         that lets foreachBatch sinks fence replayed epochs (see
         ``IncrementalRollup``)."""
-        batch1 = batch.dropDuplicates(self.key_cols)
+        batch1 = batch.dropDuplicates(self.key_cols) \
+            .localCheckpoint(eager=True)
         parent = self.current_version()
         current = self._read_at(parent)
         # an empty merge is a NO-OP whether or not the table exists:
@@ -694,72 +755,79 @@ class ParquetUpsertTable:
         # with no parquet files at all (only _SUCCESS), bricking every
         # later read with 'Unable to infer schema'
         if batch1.isEmpty():
-            return
-        target = self._stage_dir()
-        if current is None:
-            writer = batch1.write.mode("overwrite")
-            if self.partition_col:
-                writer = writer.partitionBy(self.partition_col)
-            writer.parquet(target)
-            self._record_changes(target, None, batch=batch1)
-            self._publish(target, parent, commit_meta)
-            return
-        if not self.partition_col:
-            keep = _anti_by_keys(current, batch1, self.key_cols)
-            keep.unionByName(batch1, allowMissingColumns=True) \
-                .write.mode("overwrite").parquet(target)
-            # an unpartitioned merge rewrites the whole table, so its
-            # recording diffs full old vs full new — same cost shape
-            # as the merge itself
-            self._record_changes(target, current, batch=batch1)
-            self._publish(target, parent, commit_meta)
-            return
+            return parent
         pc = self.partition_col
-        touched = [r[0] for r in batch1.select(pc).distinct().collect()]
-        # a key may MOVE partitions (its new row lands in a partition
-        # its old row doesn't live in); the old copy must not survive
-        # the merge, so partitions holding moved keys join the rewrite
-        # set. Cost: one key-column semi-join over the untouched
-        # partitions (column-pruned scan of keys only) — the price of
-        # true MERGE-by-key semantics; partitions rewritten stay
-        # O(batch ∩ partitions ∪ moved-key partitions)
-        # NOT of the touched filter must be null-safe: for a pc=NULL
-        # row, isin(...) is NULL and filter(~NULL) drops it — which
-        # would hide a key moving OUT of the null partition and leave
-        # its stale copy hardlinked into the new version
-        untouched = ~F.coalesce(_touched_filter(pc, touched), F.lit(False))
-        moved_src = self._moved_scan_source(batch1, parent, untouched)
-        moved = (moved_src.join(batch1.select(*self.key_cols),
-                                self.key_cols, "left_semi")
-                 .select(pc).distinct()) if moved_src is not None \
-            else None
-        seen = {hive_partition_value(t) for t in touched}
-        if moved is not None:
-            for r in moved.collect():  # bounded by batch key count
-                if hive_partition_value(r[0]) not in seen:
-                    touched.append(r[0])
-                    seen.add(hive_partition_value(r[0]))
-        keep = _anti_by_keys(current.filter(_touched_filter(pc, touched)),
-                             batch1, self.key_cols)
-        # allowMissingColumns: document streams evolve (O14); a batch
-        # adding or dropping a column merges with nulls on either side —
-        # full-document set semantics, like the reference's batch.set
-        (keep.unionByName(batch1, allowMissingColumns=True)
-         .write.mode("overwrite").partitionBy(pc).parquet(target))
-        # record BEFORE linking: at this point the staged dir holds
-        # exactly the rewritten (touched) partitions, and every
-        # current row whose key is in the batch lives in a touched
-        # partition (the moved-key extension above guarantees it), so
-        # diffing touched-old vs staged IS the full version diff —
-        # untouched partitions are carried as hardlinks, provably
-        # unchanged. Cost ∝ batch, not table.
-        self._record_changes(
-            target, current.filter(_touched_filter(pc, touched)),
-            batch=batch1)
-        self._link_untouched_partitions(
-            self._data_dir(parent), target,
-            {hive_partition_value(t) for t in touched})
-        self._publish(target, parent, commit_meta)
+        seen = None  # hive values of the rewritten partitions
+        if current is None:
+            scope = None
+        elif not pc:
+            scope = current
+        else:
+            touched = [r[0] for r in
+                       batch1.select(pc).distinct().collect()]
+            # a key may MOVE partitions (its new row lands in a
+            # partition its old row doesn't live in); the old copy must
+            # not survive the merge, so partitions holding moved keys
+            # join the rewrite set. Cost: one key-column semi-join over
+            # the untouched partitions (column-pruned scan of keys
+            # only) — the price of true MERGE-by-key semantics;
+            # partitions rewritten stay O(batch ∩ partitions ∪
+            # moved-key partitions). NOT of the touched filter must be
+            # null-safe: for a pc=NULL row, isin(...) is NULL and
+            # filter(~NULL) drops it — which would hide a key moving
+            # OUT of the null partition and leave its stale copy
+            # hardlinked into the new version
+            untouched = ~F.coalesce(_touched_filter(pc, touched),
+                                    F.lit(False))
+            moved_src = self._moved_scan_source(batch1, parent, untouched)
+            moved = (moved_src.join(batch1.select(*self.key_cols),
+                                    self.key_cols, "left_semi")
+                     .select(pc).distinct()) if moved_src is not None \
+                else None
+            seen = {hive_partition_value(t) for t in touched}
+            if moved is not None:
+                for r in moved.collect():  # bounded by batch key count
+                    if hive_partition_value(r[0]) not in seen:
+                        touched.append(r[0])
+                        seen.add(hive_partition_value(r[0]))
+            # every current row whose key is in the batch lives in a
+            # touched partition now, so the scope holds every row the
+            # merge can change
+            scope = current.filter(_touched_filter(pc, touched))
+        if scope is None:
+            written = new = batch1
+        else:
+            # allowMissingColumns: document streams evolve (O14); a
+            # batch adding or dropping a column merges with nulls on
+            # either side — full-document set semantics, like the
+            # reference's batch.set. The recording's new side passes
+            # the batch through the SAME union, so its column types
+            # and missing-column nulls are those of the written rows.
+            keep = _filter_by_keys(scope, batch1, self.key_cols,
+                                   "left_anti")
+            written = keep.unionByName(batch1, allowMissingColumns=True)
+            new = keep.limit(0).unionByName(batch1,
+                                            allowMissingColumns=True)
+        target = self._stage_dir()
+        try:
+            writer = written.write.mode("overwrite")
+            if pc:
+                writer = writer.partitionBy(pc)
+            writer.parquet(target)
+            self._record_merge(target, scope, batch1, new)
+            if seen is not None:
+                self._link_untouched_partitions(
+                    self._data_dir(parent), target, seen)
+        except BaseException:
+            # nothing is published yet: the staged data is an orphan
+            shutil.rmtree(target, ignore_errors=True)
+            raise
+        v = self._publish(target, parent, commit_meta)
+        # the next merge reads this version as its parent: hand it the
+        # schema just written instead of re-inferring it from footers
+        self._read_memo[v] = (self.spark.read.schema(written.schema)
+                              .parquet(self._data_dir(v)))
+        return v
 
     @staticmethod
     def _link_untouched_partitions(prev_dir: str, target: str,
@@ -839,9 +907,9 @@ class ParquetUpsertTable:
         pc = self.partition_col
         if pc and pc in keys.columns:
             touched = [r[0] for r in keys.select(pc).distinct().collect()]
-            remaining = _anti_by_keys(
+            remaining = _filter_by_keys(
                 current.filter(_touched_filter(pc, touched)),
-                keys, self.key_cols)
+                keys, self.key_cols, "left_anti")
             if remaining.isEmpty() and not any(
                     os.path.isdir(os.path.join(self._data_dir(parent), d))
                     and "=" in d and unquote(d.split("=", 1)[1])
@@ -867,7 +935,8 @@ class ParquetUpsertTable:
                 self._data_dir(parent), target,
                 {hive_partition_value(t) for t in touched})
         else:
-            remaining = _anti_by_keys(current, keys, self.key_cols)
+            remaining = _filter_by_keys(current, keys, self.key_cols,
+                                        "left_anti")
             if remaining.isEmpty():
                 # deleting every row must still leave one schema-ful
                 # (empty) parquet file, or the version is unreadable
@@ -1011,22 +1080,29 @@ class ParquetUpsertTable:
             return None
 
     def _publish(self, staged: str, parent: int,
-                 commit_meta: "dict | Callable | None" = None) -> None:
+                 commit_meta: "dict | Callable | None" = None) -> int:
         """Commit the fully-staged directory ``staged`` as version
-        ``parent + 1`` — the CAS step of the commit protocol (see the
-        version-pointer comment block). Raises
+        ``parent + 1`` (returned) — the CAS step of the commit protocol
+        (see the version-pointer comment block). Raises
         :class:`ConcurrentCommitError` (and removes the staged data)
         if any other writer got there first.
 
         ``commit_meta`` may be a CALLABLE returning the dict: it is
-        evaluated HERE, inside the retried write body, so a caller
-        whose meta depends on concurrently-advancing state (e.g. the
-        join view stamping the other side's cursor) re-reads it fresh
-        on every retry instead of publishing a pre-conflict
-        snapshot."""
+        evaluated HERE, inside the retried write body and before the
+        CAS, so a caller whose meta depends on concurrently-advancing
+        state (e.g. the join view stamping the other side's cursor)
+        re-reads it fresh on every retry instead of publishing a
+        pre-conflict snapshot, and a caller can hold the commit back
+        until another table has committed (the pipeline's hash state
+        waits on its documents). A callable that raises aborts the
+        commit: the staged data is removed and the error propagates."""
         v = parent + 1
         if callable(commit_meta):
-            commit_meta = commit_meta()
+            try:
+                commit_meta = commit_meta()
+            except BaseException:
+                shutil.rmtree(staged, ignore_errors=True)
+                raise
         if commit_meta is None and parent >= 0:
             # carry the parent version's tag forward: a meta-less
             # maintenance commit (optimize, delete_keys, backfill
@@ -1103,6 +1179,7 @@ class ParquetUpsertTable:
                 pass
         # keep the driver-side read memo aligned with the on-disk window
         self._evict_read_memo(v - self.retain_versions + 1)
+        return v
 
     @_retrying
     def touch(self, commit_meta: "dict | Callable") -> None:
@@ -1637,9 +1714,13 @@ class HashStateTable:
         return incoming.join(stored.select("id", "hash"),
                              ["id", "hash"], "left_anti")
 
-    def record(self, rows: DataFrame) -> None:
-        """Persist (id, hash) for written docs."""
-        self.table.merge(rows.select("id", "hash"))
+    def record(self, rows: DataFrame,
+               commit_meta: "dict | Callable | None" = None) -> int:
+        """Persist (id, hash) for written docs; ``commit_meta`` is
+        passed to :meth:`ParquetUpsertTable.merge`. Returns the
+        committed version."""
+        return self.table.merge(rows.select("id", "hash"),
+                                commit_meta=commit_meta)
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str],

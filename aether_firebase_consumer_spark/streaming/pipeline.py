@@ -17,9 +17,11 @@ the v1 image has no broker).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Sequence
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,7 +69,19 @@ def transform(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 class StreamingUpsertJob:
     """foreachBatch sink: sync-mode gate (O8) + hash-gated change
-    detection (O10) + MERGE upsert (O12) + schema drift log (O14)."""
+    detection (O10) + MERGE upsert (O12) + schema drift log (O14).
+
+    Each batch's two merges overlap: the document merge runs on the
+    ``foreachBatch`` thread and the hash-state merge on one
+    ``InheritableThread``, whose Spark jobs keep the batch's local
+    properties (the job group ``query.stop()`` cancels, the streaming
+    batch id). Each merge's change recording costs ∝ batch (see
+    :meth:`ParquetUpsertTable.merge`). The hash state's commit is
+    ordered AFTER the document commit and tagged ``{"doc_version":
+    v}``: a stored hash suppresses its document on redelivery, so it
+    must never be visible before that document is. A failed document
+    merge aborts the hash commit, and the batch's replay rewrites the
+    documents."""
 
     def __init__(self, cfg: PipelineConfig, doc_table: ParquetUpsertTable,
                  hash_table: HashStateTable):
@@ -113,10 +127,40 @@ class StreamingUpsertJob:
             # O(table) per idle micro-batch at scale
             if to_write.isEmpty():
                 return
-            self.doc_table.merge(to_write.drop("hash"))
-            self.hash_table.record(to_write)
+            self._merge(to_write)
         finally:
             to_write.unpersist()
+
+    def _merge(self, to_write: DataFrame) -> None:
+        """The document merge here and the hash-state merge on a
+        helper thread, the hash commit held until the documents have
+        committed (see the class docstring)."""
+        doc_version: list[int] = []
+        doc_done = threading.Event()
+        hash_error: list[BaseException] = []
+
+        def after_docs() -> dict:
+            doc_done.wait()
+            if not doc_version:
+                raise RuntimeError("document merge failed; the hash "
+                                   "state is not committed")
+            return {"doc_version": doc_version[0]}
+
+        def record_hashes() -> None:
+            try:
+                self.hash_table.record(to_write, commit_meta=after_docs)
+            except BaseException as e:  # re-raised on this thread
+                hash_error.append(e)
+
+        helper = InheritableThread(target=record_hashes, daemon=True)
+        helper.start()
+        try:
+            doc_version.append(self.doc_table.merge(to_write.drop("hash")))
+        finally:
+            doc_done.set()
+            helper.join()
+        if hash_error:
+            raise hash_error[0]
 
     def writer(self, stream: DataFrame, checkpoint: str):
         # observe(): per-batch row count + distinct-path reach computed

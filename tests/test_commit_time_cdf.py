@@ -36,7 +36,9 @@ def _t(spark, root, **kw):
 
 
 def _set(df):
-    return sorted((r.k, r.change_type) for r in df.collect())
+    """(k, change_type) rows, sorted; a null key sorts last."""
+    return sorted(((r.k, r.change_type) for r in df.collect()),
+                  key=lambda kc: (kc[0] is None, kc[0] or 0, kc[1]))
 
 
 def _diff_of(t, v):
@@ -67,8 +69,10 @@ def test_every_op_records_the_exact_diff(spark, tmp_path, partitioned):
         return spark.createDataFrame(rows, ddl)
 
     # v0 create, v1 update+insert+no-op-rewrite, v2 delete_keys,
-    # v3 delete_where, v4 optimize (no changes), v5 replace
-    t.merge(df([(1, "a", "x"), (2, "b", "x"), (3, "c", "y")]))
+    # v3 delete_where, v4 optimize (no changes), v5 replace; the
+    # null-keyed row is untouched until the replace drops it
+    t.merge(df([(1, "a", "x"), (2, "b", "x"), (3, "c", "y"),
+                (None, "n", "x")]))
     t.merge(df([(2, "B", "x"),            # update
                 (3, "c", "y"),            # identical row → NOT a change
                 (4, "d", "z")]))          # insert
@@ -83,13 +87,19 @@ def test_every_op_records_the_exact_diff(spark, tmp_path, partitioned):
     for v in t.versions():
         assert t._has_parquet(_recorded_dir(t, v)), f"v{v} unrecorded"
     _assert_recorded_equals_diff(t)
+    # an untouched null key records nothing, recorded or diffed
+    for v in range(1, 5):
+        assert None not in [k for k, _ in _set(t.changes(v))]
+        assert None not in [k for k, _ in _set(_diff_of(t, v))]
     # spot-check semantics
+    assert _set(t.changes(0))[-1] == (None, "insert")
     assert _set(t.changes(1)) == [(2, "update"), (4, "insert")]
     assert _set(t.changes(2)) == [(1, "delete")]
     assert _set(t.changes(3)) == [(4, "delete")]
     assert _set(t.changes(4)) == []
     # replace: key 2's row is byte-identical → not a change
-    assert _set(t.changes(5)) == [(3, "delete"), (9, "insert")]
+    assert _set(t.changes(5)) == [(3, "delete"), (9, "insert"),
+                                  (None, "delete")]
 
 
 def test_schema_evolution_merge_records_the_diff(spark, tmp_path):

@@ -53,6 +53,28 @@ def test_publish_cas_exactly_one_winner(spark, tmp_path):
     assert [r["v"] for r in t.read().where("id = 2").collect()] == ["a"]
 
 
+def test_raising_commit_meta_removes_the_staged_dir(spark, tmp_path):
+    """A commit_meta callable that raises aborts the commit before the
+    CAS: the version stays, and the staged data is removed rather than
+    left behind as an orphan until a vacuum."""
+    t = ParquetUpsertTable(spark, str(tmp_path / "meta"), ["id"])
+    t.merge(_df(spark, [1], "base"))
+    parent = t.current_version()
+
+    def boom():
+        raise RuntimeError("meta refused")
+
+    staged = _stage(spark, t, [2], "a")
+    with pytest.raises(RuntimeError, match="meta refused"):
+        t._publish(staged, parent, commit_meta=boom)
+    assert not os.path.isdir(staged)
+    with pytest.raises(RuntimeError, match="meta refused"):
+        t.merge(_df(spark, [3], "b"), commit_meta=boom)
+    assert t.current_version() == parent
+    assert [n for n in os.listdir(t.path) if n.startswith("_staged-")] \
+        == []
+
+
 def test_concurrent_merges_both_land(spark, tmp_path):
     """The VERDICT done-criterion: two threads committing concurrently
     — both commits land (via the automatic re-derive retry) or fail

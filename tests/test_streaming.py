@@ -1080,6 +1080,84 @@ def test_multi_version_batch_consistent_survivor(spark, tmp_path):
     assert got == {"x": "v3", "y": "w1"}
 
 
+def _sync_job(spark, tmp_path, tag):
+    cfg = PipelineConfig(tenant="t1", sync_mode="sync", seq_col="offset")
+    doc_table = ParquetUpsertTable(spark, str(tmp_path / f"{tag}_docs"),
+                                   ["id"])
+    hash_table = HashStateTable(spark, str(tmp_path / f"{tag}_hashes"))
+    return doc_table, hash_table, StreamingUpsertJob(cfg, doc_table,
+                                                     hash_table)
+
+
+def _staged_dirs(*tables):
+    return [n for t in tables for n in os.listdir(t.path)
+            if n.startswith("_staged-")]
+
+
+def test_failed_doc_merge_aborts_the_hash_commit(spark, tmp_path):
+    """The hash-state merge overlaps the document merge but commits
+    after it: a document merge that raises leaves the hash table at
+    its version with no staged leftovers in either table, so the
+    replayed batch is not suppressed by hashes of unwritten documents
+    and writes them."""
+    doc_table, hash_table, job = _sync_job(spark, tmp_path, "abort")
+    schema = "id string, payload string, offset long"
+    job.process_batch(spark.createDataFrame([("x", "v1", 1)], schema), 0)
+    doc_v = doc_table.current_version()
+    hash_v = hash_table.table.current_version()
+    assert hash_table.table.commit_meta() == {"doc_version": doc_v}
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected document-merge failure")
+
+    # fails after the document data is staged, before its commit
+    doc_table._write_changes = fail
+    batch = spark.createDataFrame([("x", "v2", 2), ("y", "w1", 3)], schema)
+    with pytest.raises(RuntimeError, match="injected"):
+        job.process_batch(batch, 1)
+    assert doc_table.current_version() == doc_v
+    assert hash_table.table.current_version() == hash_v
+    assert _staged_dirs(doc_table, hash_table.table) == []
+
+    del doc_table._write_changes
+    job.process_batch(batch, 1)  # the replay
+    got = {r["id"]: r["payload"] for r in doc_table.read().collect()}
+    assert got == {"x": "v2", "y": "w1"}
+    assert hash_table.table.commit_meta() == {
+        "doc_version": doc_table.current_version()}
+    assert {r["id"] for r in hash_table.table.read().collect()} == \
+        {"x", "y"}
+
+
+def test_hash_merge_thread_keeps_local_properties(spark, tmp_path):
+    """The hash-state merge runs on a helper thread; its Spark jobs
+    must carry the caller's local properties (the job group a query
+    stop cancels, the streaming batch id), so a property set on the
+    calling thread is visible inside HashStateTable.record."""
+    import threading
+
+    doc_table, hash_table, job = _sync_job(spark, tmp_path, "props")
+    record = hash_table.record
+    seen = {}
+
+    def spy(*args, **kwargs):
+        seen["thread"] = threading.get_ident()
+        seen["prop"] = spark.sparkContext.getLocalProperty(
+            "afcs.test.batch")
+        return record(*args, **kwargs)
+
+    hash_table.record = spy
+    sc = spark.sparkContext
+    sc.setLocalProperty("afcs.test.batch", "7")
+    try:
+        job.process_batch(spark.createDataFrame(
+            [("x", "v1", 1)], "id string, payload string, offset long"), 7)
+    finally:
+        sc.setLocalProperty("afcs.test.batch", None)
+    assert seen["thread"] != threading.get_ident()
+    assert seen["prop"] == "7"
+
+
 def test_http_document_store_e2e_with_injected_transient_failures(
         spark, tmp_path):
     """O12's connector contract against a real NETWORK store: a REST
