@@ -48,10 +48,15 @@ Semantics mirror the JVM Kafka source where they overlap:
   picked up from offset 0 (earliest) — the reconcile behavior O2
   needs.
 
-Scale shape: one :class:`InputPartition` per (topic, partition,
-offset-range); each Spark task opens its own socket and fetches only
-its range — the consumer-per-task model, parallelism = Kafka
-partition count, no driver-side data movement. On a real cluster the
+Scale shape: the number of Spark tasks follows the batch's offsets,
+not its partition count — one task per ``TASK_OFFSETS`` offsets (at
+least ``minPartitions``), each an :class:`InputPartition` carrying a
+list of (topic, partition, offset-range) pieces packed by
+:func:`_plan_tasks`. Each task opens one socket and fetches its
+ranges one after another — the consumer-per-task model with no
+driver-side data movement, where a small micro-batch over many
+partitions pays one task's Python-worker set-up, not one per
+partition. On a real cluster the
 JVM spark-sql-kafka source (options via
 ``readers.kafka_source_options``) remains the production path; this
 is the proof-of-semantics twin, like ``avro_codec`` is for Avro.
@@ -60,6 +65,7 @@ is the proof-of-semantics twin, like ``avro_codec`` is for Avro.
 from __future__ import annotations
 
 import datetime
+import heapq
 import re
 import time
 import zlib
@@ -171,65 +177,68 @@ def _split_tp(key: str) -> tuple[str, int]:
     return topic, int(part)
 
 
-class KafkaRangePartition(InputPartition):
-    """One (topic, partition, [start, end)) fetch range — pickled to
-    the executor, which opens its own socket."""
+class KafkaTaskPartition(InputPartition):
+    """One Spark task's fetch list: ``(topic, partition, start, end)``
+    offset ranges read one after another over one socket — pickled to
+    the executor, which opens that socket itself."""
 
-    def __init__(self, host: str, port: int, topic: str, partition: int,
-                 start: int, end: int, security: dict | None = None,
-                 isolation: str = "read_uncommitted") -> None:
+    def __init__(self, ranges: list[tuple[str, int, int, int]],
+                 host: str, port: int, security: dict,
+                 isolation: str, include_headers: bool) -> None:
+        self.ranges = ranges
         self.host, self.port = host, port
-        self.topic, self.partition = topic, partition
-        self.start, self.end = start, end
-        self.security = security or {}
+        self.security = security
         self.isolation = isolation
-        self.include_headers = False
+        self.include_headers = include_headers
 
 
-def _read_range(p: KafkaRangePartition) -> Iterator[tuple]:
-    """Executor-side fetch loop: repeated bounded fetches until the
-    range is drained (one fetch returns at most max_bytes; the loop is
-    the poll loop of the reference consumer, minus the sleep)."""
+def _read_task(p: KafkaTaskPartition) -> Iterator[tuple]:
+    """Executor-side fetch loop: per range, repeated bounded fetches
+    until the range is drained (one fetch returns at most max_bytes;
+    the loop is the poll loop of the reference consumer, minus the
+    sleep)."""
+    want_headers, iso = p.include_headers, p.isolation
     with KafkaWireClient(p.host, p.port,
                          **_security_kwargs(p.security)) as client:
-        offset = p.start
-        while offset < p.end:
-            want_headers = getattr(p, "include_headers", False)
-            iso = getattr(p, "isolation", "read_uncommitted")
-            if want_headers and client._max_version(API_FETCH) >= 4:
-                batch, _hw, _lso = client.fetch_records_meta(
-                    p.topic, p.partition, offset, isolation=iso,
-                    include_headers=True)
-            else:
-                # v0-only broker: magic-0 carries no headers — the
-                # column degrades to an empty list, like timestamp
-                # degrades to null
-                batch = [rec + ((),) if want_headers else rec
-                         for rec in client.fetch_records(
-                             p.topic, p.partition, offset,
-                             isolation=iso)]
-            if not batch:
-                if client._max_version(API_FETCH) >= 4:
-                    # a v4 fetch returns at least the first record
-                    # when one exists (KIP-74 shape) — empty means the
-                    # remaining span holds only transaction control
-                    # markers or compaction ghosts, no records at all
-                    break
-                raise RuntimeError(
-                    f"fetch at {p.topic}/{p.partition}:{offset} returned "
-                    f"nothing but range end is {p.end} — log truncated?")
-            for rec in batch:
-                off, ts, key, value = rec[:4]
-                if off >= p.end:
-                    break
-                if off < offset:
-                    continue
-                row = (key, value, p.topic, p.partition, off,
-                       _ms_to_dt(ts), 0 if ts is not None else -1)
-                if want_headers:
-                    row += (list(rec[4]),)
-                yield row
-            offset = max(offset + 1, batch[-1][0] + 1)
+        for topic, partition, start, end in p.ranges:
+            offset = start
+            while offset < end:
+                if want_headers and client._max_version(API_FETCH) >= 4:
+                    batch, _hw, _lso = client.fetch_records_meta(
+                        topic, partition, offset, isolation=iso,
+                        include_headers=True)
+                else:
+                    # v0-only broker: magic-0 carries no headers — the
+                    # column degrades to an empty list, like timestamp
+                    # degrades to null
+                    batch = [rec + ((),) if want_headers else rec
+                             for rec in client.fetch_records(
+                                 topic, partition, offset,
+                                 isolation=iso)]
+                if not batch:
+                    if client._max_version(API_FETCH) >= 4:
+                        # a v4 fetch returns at least the first record
+                        # when one exists (KIP-74 shape) — empty means
+                        # the remaining span holds only transaction
+                        # control markers or compaction ghosts, no
+                        # records at all
+                        break
+                    raise RuntimeError(
+                        f"fetch at {topic}/{partition}:{offset} returned "
+                        f"nothing but range end is {end} — log "
+                        f"truncated?")
+                for rec in batch:
+                    off, ts, key, value = rec[:4]
+                    if off >= end:
+                        break
+                    if off < offset:
+                        continue
+                    row = (key, value, topic, partition, off,
+                           _ms_to_dt(ts), 0 if ts is not None else -1)
+                    if want_headers:
+                        row += (list(rec[4]),)
+                    yield row
+                offset = max(offset + 1, batch[-1][0] + 1)
 
 
 class _TopicResolver:
@@ -296,6 +305,17 @@ class _TopicResolver:
         if iso not in ("read_uncommitted", "read_committed"):
             raise ValueError(f"kafka_py: bad isolation level {iso!r}")
         self.isolation = iso
+        mp = options.get("minpartitions") or options.get("minPartitions")
+        self.min_partitions = int(mp) if mp else None
+
+    def tasks(self, ranges: list[tuple[str, int, int, int]]
+              ) -> list[KafkaTaskPartition]:
+        """Offset ranges → this batch's InputPartitions (see
+        :func:`_plan_tasks`)."""
+        return [KafkaTaskPartition(task, self.host, self.port,
+                                   self.security, self.isolation,
+                                   self.include_headers)
+                for task in _plan_tasks(ranges, self.min_partitions)]
 
     def _client(self) -> KafkaWireClient:
         return KafkaWireClient(self.host, self.port,
@@ -363,35 +383,66 @@ class _TopicResolver:
                 for t, parts in wanted.items() for p in parts}
 
 
-def _split_ranges(ranges: list[tuple[str, int, int, int]],
-                  min_partitions: Optional[int],
-                  host: str, port: int,
-                  security: dict | None = None,
-                  isolation: str = "read_uncommitted",
-                  include_headers: bool = False
-                  ) -> list[KafkaRangePartition]:
-    """(topic, partition, start, end) → InputPartitions, subdividing
-    offset ranges until there are ≥ ``min_partitions`` tasks (the JVM
-    source's ``minPartitions`` contract): a skewed topic whose data
-    sits in one Kafka partition would otherwise serialize into one
-    Spark task. Ranges are split proportionally to their length, so
-    splits stay balanced."""
+#: Offsets one Spark task reads before the plan adds another. Every
+#: task pays a fixed Python cost before its first record: two Python
+#: runners (the read here and the usual downstream ``mapInPandas``
+#: decode), each running PySpark's per-task ``setup_spark_files`` →
+#: ``importlib.invalidate_caches()``, which re-reads the directories of
+#: ``pyspark.zip``, the py4j zip and the Spark core jar on the worker's
+#: ``sys.path``. Measured on a 4-CPU x86 box: that call took 173–250 ms
+#: (median ~220 ms) per runner in a reused worker, and fetching plus
+#: Avro-decoding one benchmark document in Python (``_read_task`` over
+#: a local broker, then the Avro decode) took ~94 µs. So 2 × 220 ms ÷
+#: 94 µs ≈ 4.7k records of real work cost what one more task's set-up
+#: costs; below that, a second task adds more fixed cost than the
+#: parallel work it saves. Both costs are Python-bound and scale
+#: together with CPU speed, so the ratio carries across boxes.
+TASK_OFFSETS = 5000
+
+
+def _plan_tasks(ranges: list[tuple[str, int, int, int]],
+                min_partitions: Optional[int]
+                ) -> list[list[tuple[str, int, int, int]]]:
+    """(topic, partition, start, end) ranges → one list of ranges per
+    Spark task. The task count follows the batch's offsets, not its
+    partition count: ``k = max(min_partitions or 1, ⌈total /
+    TASK_OFFSETS⌉)`` (capped at one offset per task), so a small batch
+    over many partitions is one task and ``minPartitions`` (the JVM
+    source's contract: a skewed topic whose data sits in one Kafka
+    partition still spreads over that many tasks) plans exactly that
+    many. Ranges are cut into pieces of at most ``total // k`` offsets
+    — floor, so there are always at least ``k`` pieces and no task is
+    left empty — and the pieces go largest first to the least-loaded
+    task. Each partition's offsets are then handed out in task order,
+    so reading the tasks in order reads every partition in offset
+    order, and a task holding adjacent pieces of one partition reads
+    them as one range."""
     total = sum(e - s for _, _, s, e in ranges)
-    out: list[KafkaRangePartition] = []
-    want = min_partitions or 0
-    for topic, part, s, e in ranges:
-        n = 1
-        if want > len(ranges) and total > 0:
-            n = max(1, round((e - s) / total * want))
-        n = min(n, e - s)
-        step = (e - s + n - 1) // n
-        for lo in range(s, e, step):
-            part_obj = KafkaRangePartition(
-                host, port, topic, part, lo, min(lo + step, e),
-                security=security, isolation=isolation)
-            part_obj.include_headers = include_headers
-            out.append(part_obj)
-    return out
+    if not total:
+        return []
+    k = min(total, max(min_partitions or 1, -(-total // TASK_OFFSETS)))
+    cap = total // k
+    pieces = sorted(((min(cap, e - lo), topic, part)
+                     for topic, part, s, e in ranges
+                     for lo in range(s, e, cap)), reverse=True)
+    loads = [(0, i) for i in range(k)]
+    sizes: list[list[tuple[str, int, int]]] = [[] for _ in range(k)]
+    for n, topic, part in pieces:
+        load, i = heapq.heappop(loads)
+        sizes[i].append((topic, part, n))
+        heapq.heappush(loads, (load + n, i))
+    cursor = {(topic, part): s for topic, part, s, _ in ranges}
+    plan = []
+    for task in sizes:
+        out: list[tuple[str, int, int, int]] = []
+        for topic, part, n in sorted(task):
+            lo = cursor[topic, part]
+            cursor[topic, part] = lo + n
+            if out and out[-1][:2] == (topic, part):
+                lo = out.pop()[2]
+            out.append((topic, part, lo, cursor[topic, part]))
+        plan.append(out)
+    return plan
 
 
 class KafkaPyBatchReader(DataSourceReader):
@@ -399,9 +450,6 @@ class KafkaPyBatchReader(DataSourceReader):
 
     def __init__(self, options: dict) -> None:
         self._resolver = _TopicResolver(options)
-        mopt = (options.get("minpartitions")
-                or options.get("minPartitions"))
-        self._min_partitions = int(mopt) if mopt else None
 
     def partitions(self):
         lo = self._resolver.initial_offsets()
@@ -414,15 +462,10 @@ class KafkaPyBatchReader(DataSourceReader):
             if end > start:
                 topic, part = _split_tp(key)
                 ranges.append((topic, part, start, end))
-        return _split_ranges(ranges, self._min_partitions,
-                             self._resolver.host, self._resolver.port,
-                             self._resolver.security,
-                             isolation=self._resolver.isolation,
-                             include_headers=self._resolver
-                             .include_headers)
+        return self._resolver.tasks(ranges)
 
-    def read(self, partition: KafkaRangePartition):
-        return _read_range(partition)
+    def read(self, partition: KafkaTaskPartition):
+        return _read_task(partition)
 
 
 class KafkaPyStreamReader(DataSourceStreamReader):
@@ -457,8 +500,6 @@ class KafkaPyStreamReader(DataSourceStreamReader):
         mopt = (options.get("maxoffsetspertrigger")
                 or options.get("maxOffsetsPerTrigger"))
         self._max_per_trigger = int(mopt) if mopt else None
-        mp = options.get("minpartitions") or options.get("minPartitions")
-        self._min_partitions = int(mp) if mp else None
         #: per-tp high-water mark of planned ranges (see docstring)
         self._floor: dict = {}
 
@@ -496,15 +537,10 @@ class KafkaPyStreamReader(DataSourceStreamReader):
             if e > s:
                 topic, part = _split_tp(key)
                 ranges.append((topic, part, s, e))
-        return _split_ranges(ranges, self._min_partitions,
-                             self._resolver.host, self._resolver.port,
-                             self._resolver.security,
-                             isolation=self._resolver.isolation,
-                             include_headers=self._resolver
-                             .include_headers)
+        return self._resolver.tasks(ranges)
 
-    def read(self, partition: KafkaRangePartition):
-        return _read_range(partition)
+    def read(self, partition: KafkaTaskPartition):
+        return _read_task(partition)
 
     def commit(self, end: dict) -> None:
         pass  # positions live in Spark's checkpoint, not the broker

@@ -113,6 +113,36 @@ def test_batch_read_parallel_partitions(spark, broker):
         assert sorted(offs) == list(range(len(offs)))
 
 
+def test_small_multi_topic_batch_is_one_task(spark, broker):
+    """Three topics × two partitions, 150 records: the read plans ONE
+    Spark task (its ranges read one after another over one socket)
+    and returns every produced row, each partition in offset order."""
+    _register(spark)
+    produced = set()
+    with _client(broker) as c:
+        for t in ("small.a", "small.b", "small.c"):
+            broker.create_topic(t, partitions=2)
+            for p in (0, 1):
+                recs = [(f"{t}/{p}/{i}".encode(), f"v{i}".encode(),
+                         1_700_000_000_000 + i) for i in range(25)]
+                c.produce_records(t, p, recs)
+                produced |= {(k, v, t, p, i, ts)
+                             for i, (k, v, ts) in enumerate(recs)}
+    df = (spark.read.format("kafka_py")
+          .option("bootstrap", broker.bootstrap)
+          .option("subscribePattern", "small\\..*").load())
+    assert df.rdd.getNumPartitions() == 1
+    rows = df.collect()
+    got = {(bytes(r.key), bytes(r.value), r.topic, r.partition, r.offset,
+            round(r.timestamp.timestamp() * 1000)) for r in rows}
+    assert got == produced
+    assert {r.timestampType for r in rows} == {0}
+    for t in ("small.a", "small.b", "small.c"):
+        for p in (0, 1):
+            assert [r.offset for r in rows
+                    if (r.topic, r.partition) == (t, p)] == list(range(25))
+
+
 def test_batch_read_option_validation(spark, broker):
     _register(spark)
     df = spark.read.format("kafka_py").option("bootstrap", broker.bootstrap)
@@ -606,8 +636,9 @@ def test_list_offsets_bulk_single_round_trip(broker):
 
 def test_min_partitions_splits_offset_ranges(spark, broker, tmp_path):
     """minPartitions=8 over a single-Kafka-partition topic: the batch
-    splits into ≥8 Spark tasks with disjoint offset ranges, result
-    identical — the skewed-topic parallelism escape hatch."""
+    splits into exactly 8 Spark tasks with disjoint offset ranges,
+    result identical — the skewed-topic parallelism escape hatch.
+    Over several partitions the count is exact too."""
     _register(spark)
     with _client(broker) as c:
         c.produce("skewed.t", 0, [(None, f"m{i}".encode())
@@ -616,9 +647,22 @@ def test_min_partitions_splits_offset_ranges(spark, broker, tmp_path):
           .option("bootstrap", broker.bootstrap)
           .option("subscribe", "skewed.t")
           .option("minPartitions", "8").load())
-    assert df.rdd.getNumPartitions() >= 8
+    assert df.rdd.getNumPartitions() == 8
     rows = df.collect()
     assert sorted(r.offset for r in rows) == list(range(200))
+
+    broker.create_topic("even.t", partitions=3)
+    with _client(broker) as c:
+        for p in range(3):
+            c.produce("even.t", p, [(None, f"m{i}".encode())
+                                    for i in range(100)])
+    df3 = (spark.read.format("kafka_py")
+           .option("bootstrap", broker.bootstrap)
+           .option("subscribe", "even.t")
+           .option("minPartitions", "4").load())
+    assert df3.rdd.getNumPartitions() == 4
+    assert sorted((r.partition, r.offset) for r in df3.collect()) \
+        == [(p, i) for p in range(3) for i in range(100)]
 
     # streaming path honors it too
     sdf = (spark.readStream.format("kafka_py")

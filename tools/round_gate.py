@@ -14,9 +14,12 @@ Gates, in order:
   1. driver contract  — bare-session entry()/queries()/oracle_sql()
   2. oracle parity    — tools/oracle_check.py, full registry, sf0.01
   3. pytest           — full suite (or fast tier with --fast)
-  4. bench line       — bench.py prints ONE parseable JSON line,
+  4. perfbench tests  — the consumer benchmark's own checks
+                        (perfbench/tests: store, oracle and
+                        orphan-process checks)
+  5. bench line       — bench.py prints ONE parseable JSON line,
                         under the driver's ~2 KB tail window
-  5. artifacts        — registry_dump (QUERIES.md + count stamps)
+  6. artifacts        — registry_dump (QUERIES.md + count stamps)
                         and plan_audit (PLANS.md) run clean
 """
 
@@ -87,6 +90,9 @@ def main() -> int:
         pytest_cmd += ["-m", ""]
     results.append(run("pytest" + (" (fast)" if fast else ""),
                        pytest_cmd)[0])
+    results.append(run("perfbench-tests",
+                       [sys.executable, "-m", "pytest", "perfbench/tests",
+                        "-q"])[0])
 
     ok, out = run("bench-line", [sys.executable, "bench.py"])
     if ok:
